@@ -216,6 +216,11 @@ def jaccard_similarity_join(
 ) -> DataFrame:
     """All pairs (a < b) with token/shingle Jaccard ≥ threshold.
 
+    Precondition: ``id_col`` is unique. The per-doc shingle sets are
+    computed per ROW, so rows sharing an id are separate documents
+    under one id — the one-stage plan's intersection counts inflate
+    and pairs repeat. Aggregate or deduplicate by id first.
+
     Two exact plans, chosen by threshold when ``prefix_filter`` is
     None (the default):
 
@@ -267,9 +272,7 @@ def jaccard_similarity_join(
     # hashes, property-tested), so the old window+dropDuplicates
     # formulation's TWO pre-join passes over token rows (the lead()
     # window exchange and the (id, sh) dedup shuffle) are gone: the
-    # plan below the inverted-index join is map-only. Not persisted:
-    # reused subtrees recompute map-side per consumer, and the
-    # operator leaves no cached partitions behind (VERDICT r2 #3).
+    # plan below the inverted-index join is map-only.
     from bi_utils_spark.operators.lshkern import per_doc_signatures
 
     # The set frame feeds two plan consumers in either branch (the
@@ -278,7 +281,10 @@ def jaccard_similarity_join(
     # could share, so it is materialized once (localCheckpoint — the
     # multi-consumer discipline; sized like the corpus' distinct
     # shingle sets, the same state the old window formulation pushed
-    # through its shared shuffle files).
+    # through its shared shuffle files). The checkpoint's blocks stay
+    # in executor storage until the frame is garbage-collected, and a
+    # lost executor loses them: a job that needs them then fails
+    # instead of recomputing the kernel pass.
     doc_sets = per_doc_signatures(
         df, id_col, text_col, shingle_n, want_set=True
     ).localCheckpoint()
@@ -605,6 +611,11 @@ def minhash_near_dup_join(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH candidates verified with *exact* Jaccard on the shingle sets.
+
+    Precondition: ``id_col`` is unique. Signatures and shingle sets
+    are computed per ROW, so rows sharing an id yield several per-doc
+    rows under one id, and candidate and verify rows repeat.
+    Aggregate or deduplicate by id first.
 
     One map-only Arrow-kernel pass produces BOTH per-doc artifacts at
     once — the ``num_hashes`` signature lanes and the distinct

@@ -492,16 +492,17 @@ def bpe_train(
     this was the measured bulk of q_bpe_encode's wall).
 
     Size-tiered (r12, the connected_components discipline): a
-    one-job ``collect_limited`` probe over the checkpointed state
-    pulls the (term, c) rows; when the vocab fits
+    bounded probe over the checkpointed state — an escalating
+    ``take`` of ``driver_max_vocab + 1`` rows, each round a cached-
+    block read — pulls the (term, c) rows; when the vocab fits
     ``driver_max_vocab`` the whole merge loop runs driver-side
     (:func:`_bpe_train_driver`) — n_merges sequential argmax jobs
     plus the final state job collapse into ZERO further Spark jobs.
     Identical results by construction (equality property-tested);
     the probe over the checkpoint is metadata-cheap when the vocab
-    is over-bound, so the distributed path pays one tiny extra job,
-    never a second corpus pass. ``driver_max_vocab=0`` forces the
-    distributed loop.
+    is over-bound, so the distributed path pays that probe (usually
+    one small job), never a second corpus pass.
+    ``driver_max_vocab=0`` forces the distributed loop.
     """
     spark = model.sparkSession
     state = model.select(

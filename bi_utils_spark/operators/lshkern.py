@@ -162,6 +162,24 @@ def _simhash_fp(sh: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return np.ascontiguousarray(packed).view(np.int64).ravel()
 
 
+_INT32_MAX = (1 << 31) - 1
+
+
+def _list_offsets(counts: np.ndarray) -> np.ndarray:
+    """Arrow ``list<>`` offsets (int32) for per-row element ``counts``.
+    The cumulative sum runs in int64 and is range-checked, so a batch
+    with more than 2³¹−1 list entries raises instead of wrapping into
+    corrupt offsets."""
+    offs = np.concatenate(([0], np.cumsum(counts, dtype=np.int64)))
+    if offs[-1] > _INT32_MAX:
+        raise OverflowError(
+            f"{int(offs[-1])} list entries in one Arrow batch exceed the "
+            "int32 offset range; lower spark.sql.execution.arrow."
+            "maxRecordsPerBatch"
+        )
+    return offs.astype(np.int32)
+
+
 def per_doc_signatures(
     df: DataFrame,
     id_col: str,
@@ -218,7 +236,7 @@ def per_doc_signatures(
                     if nd
                     else np.empty((0, len(cfs)), dtype=np.int64)
                 )
-                offs = np.arange(nd + 1, dtype=np.int32) * len(cfs)
+                offs = _list_offsets(np.full(nd, len(cfs), dtype=np.int64))
                 arrays.append(
                     pa.ListArray.from_arrays(
                         pa.array(offs, type=pa.int32()),
@@ -231,9 +249,7 @@ def per_doc_signatures(
                     if nd
                     else (np.empty(0, dtype=np.int64), counts)
                 )
-                soffs = np.concatenate(([0], np.cumsum(ucounts))).astype(
-                    np.int32
-                )
+                soffs = _list_offsets(ucounts)
                 arrays.append(
                     pa.ListArray.from_arrays(
                         pa.array(soffs, type=pa.int32()),

@@ -384,6 +384,23 @@ def _collect_centroid_matrix(centroids: DataFrame):
     return ids, mat
 
 
+def _unit_query(query_vec: list[float]) -> list[float]:
+    """The query scaled to unit length (a zero vector stays zero)."""
+    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec)) or 1.0
+    return [float(x) / qn for x in query_vec]
+
+
+def _rank_cells(cell_ids, cent, qu: list[float], nprobe: int) -> list[int]:
+    """The ``nprobe`` cells nearest the unit query ``qu``: one numpy
+    ``cent @ qu`` over an (ascending ``cell_ids``, matrix) pair as
+    :func:`_collect_centroid_matrix` returns it; a stable sort breaks
+    ties toward the lower cell_id, as assignment does."""
+    import numpy as np
+
+    order = np.argsort(-(cent @ np.asarray(qu, dtype=np.float64)), kind="stable")
+    return [int(c) for c in cell_ids[order[:nprobe]]]
+
+
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
@@ -418,19 +435,14 @@ def ivf_topk(
     (exactly nprobe partitions once the index is written out)."""
     if centroids is None:
         centroids = kmeans_centroids(df, num_cells, id_col, vec_col, iters)
-    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec)) or 1.0
-    qu = [float(x) / qn for x in query_vec]
+    qu = _unit_query(query_vec)
 
     # Cell ranking is driver-side: the centroid table IS the index
     # metadata (num_cells rows), never big.
-    cells = centroids.collect()
-    ranked = sorted(
-        cells,
-        key=lambda r: (-sum(a * b for a, b in zip(qu, r["centroid"])), r["cell_id"]),
-    )
-    probe = [r["cell_id"] for r in ranked[:nprobe]]
+    cell_ids, cent = _collect_centroid_matrix(centroids)
+    probe = _rank_cells(cell_ids, cent, qu, nprobe)
 
-    assigned = ivf_assign(df, centroids, id_col, vec_col)
+    assigned = _ivf_assign_matrix(df, cell_ids, cent, 1, id_col, vec_col)
     qcol = lit_double_array(qu)
     return (
         assigned.filter(F.col("cell_id").isin(probe))
@@ -459,9 +471,24 @@ def ivf_assign_multi(
     Map-only (see ivf_assign): one numpy matmul + stable top-m argsort
     per Arrow batch; ties break toward the lower cell_id.
     """
+    cell_ids, cent = _collect_centroid_matrix(centroids)
+    return _ivf_assign_matrix(df, cell_ids, cent, num_assign, id_col, vec_col)
+
+
+def _ivf_assign_matrix(
+    df: DataFrame,
+    cell_ids,
+    cent,
+    num_assign: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """:func:`ivf_assign_multi` over a centroid table already on the
+    driver: ``cell_ids`` ascending, ``cent`` the matching (num_cells,
+    d) float64 matrix. For callers that hold the index metadata
+    (``vector_index`` reads it from parquet without a Spark job)."""
     from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
-    cell_ids, cent = _collect_centroid_matrix(centroids)
     m = min(num_assign, len(cell_ids))
     src = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
     out_schema = StructType(

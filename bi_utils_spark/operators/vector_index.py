@@ -11,36 +11,53 @@ index as plain parquet (the FAISS split, on Spark storage):
     <path>/vectors/          (id, u) rows partitioned by cell_id —
                              the corpus, unit-normalized once at
                              build time
-    <path>/_MANIFEST.json    num_cells, num_assign, id column name
+    <path>/_MANIFEST.json    num_cells, num_assign, id column name,
+                             the vectors/ schema (JSON)
 
-Probe-time, the centroid table ranks cells driver-side and the vector
-scan carries ``cell_id IN (<nprobe cells>)`` — because ``cell_id`` is
-a PARTITION column, Spark's partition discovery prunes the scan to
-exactly those directories (plan-asserted: the predicate lands in
-``PartitionFilters``, not a post-scan row filter), so probe I/O is
-nprobe/num_cells of the corpus by construction. Exactness contract:
-with ``nprobe = num_cells`` the probe equals the exact cosine top-k
-(oracle-checked by ``q_ivf_index_topk``); partial probes trade recall
-for I/O exactly like ``ivf_topk`` (same assignment code path).
+A single-query probe runs ONE Spark job:
 
-The manifest/pointer uses local-file semantics like
-``streaming/scd.py``'s ``_VERSION``; an object-store deployment swaps
-in its own manifest write (or a metastore entry) — documented, not
-gated, because the parquet layout itself is storage-agnostic.
+- index metadata is read on the driver — the centroid table with
+  ``pyarrow.parquet`` (no Spark job, the same local-file assumption
+  as the manifest) and the cells ranked by one numpy ``centroids @
+  q`` (ties toward the lower cell_id, the assignment's arithmetic);
+- the ``vectors/`` schema is pinned in the manifest at build time
+  and every read passes it, so no read runs a schema-inference job
+  (a manifest without it raises: rebuild with :func:`write_ivf_index`);
+- only the nprobe cell directories ``vectors/cell_id=<c>`` are
+  listed and read (``basePath`` keeps ``cell_id`` a partition
+  column; a probed cell with no directory — an empty k-means cell —
+  is skipped), and the ``cell_id IN (<nprobe cells>)`` predicate
+  stays in the plan as a PARTITION filter (plan-asserted: it lands in
+  ``PartitionFilters``, not a post-scan row filter). At tens of
+  thousands of cells a probe lists nprobe directories, not the index;
+- the top-k over those cells is the one job.
+
+Probe I/O is nprobe/num_cells of the corpus by construction.
+Exactness contract: with ``nprobe = num_cells`` the probe equals the
+exact cosine top-k (oracle-checked by ``q_ivf_index_topk``); partial
+probes trade recall for I/O exactly like ``ivf_topk`` (same
+assignment code path).
+
+The manifest and the driver-side centroid read use local-file
+semantics like ``streaming/scd.py``'s ``_VERSION``; an object-store
+deployment swaps in its own manifest write (or a metastore entry)
+and a filesystem-aware ``pyarrow`` read — documented, not gated,
+because the parquet layout itself is storage-agnostic.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bi_utils_spark.functions.litarrays import lit_double_array
 
 _MANIFEST = "_MANIFEST.json"
+_SCHEMA_KEY = "vectors_schema"
 
 
 def write_ivf_index(
@@ -58,13 +75,15 @@ def write_ivf_index(
     quantizer), ONE map-only assignment pass over the corpus, one
     shuffle-free partitioned write. Returns the manifest dict."""
     from bi_utils_spark.operators.similarity import (
-        ivf_assign_multi,
+        _collect_centroid_matrix,
+        _ivf_assign_matrix,
         kmeans_centroids,
     )
 
     if centroids is None:
         centroids = kmeans_centroids(df, num_cells, id_col, vec_col, iters)
-    assigned = ivf_assign_multi(df, centroids, num_assign, id_col, vec_col)
+    cell_ids, cent = _collect_centroid_matrix(centroids)
+    assigned = _ivf_assign_matrix(df, cell_ids, cent, num_assign, id_col, vec_col)
     assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
         os.path.join(path, "vectors")
     )
@@ -72,9 +91,10 @@ def write_ivf_index(
         os.path.join(path, "centroids")
     )
     manifest = {
-        "num_cells": int(centroids.count()),
+        "num_cells": len(cell_ids),
         "num_assign": int(num_assign),
         "id_col": id_col,
+        _SCHEMA_KEY: assigned.schema.json(),
     }
     with open(os.path.join(path, _MANIFEST), "w") as fh:
         json.dump(manifest, fh)
@@ -84,6 +104,53 @@ def write_ivf_index(
 def _load_manifest(path: str) -> dict:
     with open(os.path.join(path, _MANIFEST)) as fh:
         return json.load(fh)
+
+
+def _vectors_schema(path: str, man: dict) -> StructType:
+    """The ``vectors/`` schema pinned at build time — every read
+    passes it, so none runs a schema-inference job."""
+    if _SCHEMA_KEY not in man:
+        raise ValueError(
+            f"IVF index at {path!r} has no {_SCHEMA_KEY!r} in its "
+            "manifest (built by an older version); rebuild it with "
+            "write_ivf_index"
+        )
+    return StructType.fromJson(json.loads(man[_SCHEMA_KEY]))
+
+
+def _read_centroids(path: str):
+    """(cell_id vector ascending, float64 matrix) read on the driver
+    with pyarrow — num_cells rows of index metadata, no Spark job."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(path, "centroids")).sort_by("cell_id")
+    ids = t.column("cell_id").to_numpy()
+    mat = np.asarray(t.column("centroid").to_pylist(), dtype=np.float64)
+    return ids, mat
+
+
+def _read_cells(
+    spark: SparkSession, path: str, schema: StructType, cells: list[int]
+) -> DataFrame:
+    """The vector rows of ``cells`` only: lists and scans just those
+    ``cell_id=<c>`` directories (cells without one — empty k-means
+    cells — are skipped). The ``isin`` keeps the cell predicate in
+    the plan as a partition filter."""
+    base = os.path.join(path, "vectors")
+    dirs = [
+        d
+        for d in (os.path.join(base, f"cell_id={c}") for c in cells)
+        if os.path.isdir(d)
+    ]
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", base)
+        .parquet(*dirs)
+        .where(F.col("cell_id").isin(cells))
+    )
 
 
 def ivf_index_append(
@@ -101,13 +168,15 @@ def ivf_index_append(
     distribution shifts; watch :func:`ivf_index_stats` (or a PSI
     monitor on cell shares) and rebuild when balance degrades.
     ``id_col`` defaults to the manifest's id column."""
-    from bi_utils_spark.operators.similarity import ivf_assign_multi
+    from bi_utils_spark.operators.similarity import _ivf_assign_matrix
 
     man = _load_manifest(path)
-    centroids = spark.read.parquet(os.path.join(path, "centroids"))
-    assigned = ivf_assign_multi(
+    _vectors_schema(path, man)  # an old-format index: fail before writing
+    cell_ids, cent = _read_centroids(path)
+    assigned = _ivf_assign_matrix(
         new_df,
-        centroids,
+        cell_ids,
+        cent,
         man["num_assign"],
         id_col or man["id_col"],
         vec_col,
@@ -122,8 +191,10 @@ def ivf_index_stats(spark: SparkSession, path: str) -> DataFrame:
     skewed cells mean probe cost concentrates and the quantizer no
     longer fits the data (rebuild signal). Metadata-cheap: a
     partition-column count, no vector payloads read."""
+    schema = _vectors_schema(path, _load_manifest(path))
     return (
-        spark.read.parquet(os.path.join(path, "vectors"))
+        spark.read.schema(schema)
+        .parquet(os.path.join(path, "vectors"))
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
@@ -141,26 +212,20 @@ def ivf_index_probe(
     dot-product re-rank inside them (vectors are stored unit-length,
     so dot == cosine). Multi-assigned ids dedupe by max score —
     scores per id are identical across its cells, the groupBy just
-    restores uniqueness."""
-    man = _load_manifest(path)
-    cents = spark.read.parquet(os.path.join(path, "centroids")).collect()
-    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec)) or 1.0
-    qu = [float(x) / qn for x in query_vec]
-    ranked = sorted(
-        cents,
-        key=lambda r: (
-            -sum(a * b for a, b in zip(qu, r["centroid"])),
-            r["cell_id"],
-        ),
+    restores uniqueness. Collecting the result is the probe's only
+    Spark job when ``num_assign`` is 1."""
+    from bi_utils_spark.operators.similarity import (
+        _rank_cells,
+        _unit_query,
+        dot,
     )
-    probe = [int(r["cell_id"]) for r in ranked[:nprobe]]
-    from bi_utils_spark.operators.similarity import dot
 
-    qcol = lit_double_array(qu)
-    vecs = spark.read.parquet(os.path.join(path, "vectors")).where(
-        F.col("cell_id").isin(probe)
-    )
-    scored = vecs.select("id", dot(F.col("u"), qcol).alias("score"))
+    man = _load_manifest(path)
+    schema = _vectors_schema(path, man)
+    qu = _unit_query(query_vec)
+    probe = _rank_cells(*_read_centroids(path), qu, nprobe)
+    vecs = _read_cells(spark, path, schema, probe)
+    scored = vecs.select("id", dot(F.col("u"), lit_double_array(qu)).alias("score"))
     if man["num_assign"] > 1:
         scored = scored.groupBy("id").agg(F.max("score").alias("score"))
     return (
@@ -210,7 +275,7 @@ def ivf_index_probe_many(
     is runtime-small)."""
     from pyspark.sql.window import Window
 
-    from bi_utils_spark.operators.similarity import dot, ivf_assign_multi
+    from bi_utils_spark.operators.similarity import _ivf_assign_matrix, dot
 
     man = _load_manifest(path)
     if query_id_col == man["id_col"]:
@@ -218,9 +283,10 @@ def ivf_index_probe_many(
             f"query_id_col {query_id_col!r} collides with the index id "
             "column; alias the query id first"
         )
-    centroids = spark.read.parquet(os.path.join(path, "centroids"))
-    q = ivf_assign_multi(
-        queries, centroids, nprobe, query_id_col, query_vec_col
+    schema = _vectors_schema(path, man)
+    cell_ids, cent = _read_centroids(path)
+    q = _ivf_assign_matrix(
+        queries, cell_ids, cent, nprobe, query_id_col, query_vec_col
     ).select(
         F.col("id").alias("__qid"), F.col("u").alias("__qu"), "cell_id"
     )
@@ -238,9 +304,7 @@ def ivf_index_probe_many(
         int(r["cell_id"])
         for r in q.select("cell_id").distinct().collect()
     )
-    vecs = spark.read.parquet(os.path.join(path, "vectors")).where(
-        F.col("cell_id").isin(probe_cells)
-    )
+    vecs = _read_cells(spark, path, schema, probe_cells)
     qj = F.broadcast(q) if broadcast_queries else q
     scored = vecs.join(qj, "cell_id").select(
         "__qid", "id", dot(F.col("u"), F.col("__qu")).alias("score")

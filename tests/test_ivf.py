@@ -326,3 +326,134 @@ def test_index_probe_many_rejects_id_collision(spark, emb, tmp_path):
         ivf_index_probe_many(
             spark, path, emb, k=3, query_id_col="vec_id"
         )
+
+
+def test_index_probe_runs_one_job(spark, emb, tmp_path):
+    """A num_assign=1 probe is ONE Spark job: centroids and schema
+    come from the driver-side metadata, only the top-k runs on
+    Spark."""
+    from bi_utils_spark.operators.vector_index import (
+        ivf_index_probe,
+        write_ivf_index,
+    )
+
+    path = str(tmp_path / "ivf")
+    write_ivf_index(emb, path, num_cells=8, iters=1)
+    target = [float(x) for x in emb.first()["embedding"]]
+    sc = spark.sparkContext
+    group = f"ivf-probe-{tmp_path.name}"
+    sc.setJobGroup(group, "one-job probe")
+    try:
+        rows = ivf_index_probe(spark, path, target, k=5, nprobe=2).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 5
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+
+
+@pytest.fixture
+def empty_cell_index(spark, tmp_path):
+    """2-d unit vectors in the first quadrant (no angle on the
+    diagonal) against three cells: 0 = +x, 1 = +y and 2, pointing
+    into the third quadrant, which no vector is nearest — so
+    ``vectors/cell_id=2`` is never written."""
+    import math
+
+    from bi_utils_spark.operators.vector_index import write_ivf_index
+
+    rows = []
+    for i in range(40):
+        a = (i + 0.5) / 40 * math.pi / 2
+        rows.append((i, [math.cos(a), math.sin(a)]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    h = 1 / math.sqrt(2)
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-h, -h])],
+        "cell_id int, centroid array<double>",
+    )
+    path = str(tmp_path / "ivf")
+    write_ivf_index(df, path, centroids=cents)
+    assert not (tmp_path / "ivf" / "vectors" / "cell_id=2").exists()
+    return df, path
+
+
+def test_index_probe_skips_empty_cell(spark, empty_cell_index):
+    """Probed cells without a directory are skipped: the result
+    equals the exact top-k over the probed cells that exist, and a
+    probe of the empty cell alone is empty."""
+    from bi_utils_spark.operators.vector_index import ivf_index_probe
+
+    df, path = empty_cell_index
+    q = [-1.0, -0.2]  # cells ranked 2, 1, 0
+    got = ivf_index_probe(spark, path, q, k=5, nprobe=2).collect()
+    cell1 = df.where(F.col("vec_id") >= 20)  # angles above the diagonal
+    want = cosine_topk(cell1, q, k=5).collect()
+    assert [r["vec_id"] for r in got] == [r["vec_id"] for r in want]
+    for g, w in zip(got, want):
+        assert abs(g["score"] - w["score"]) < 1e-9
+    full = ivf_index_probe(spark, path, q, k=5, nprobe=3).collect()
+    assert [r["vec_id"] for r in full] == [
+        r["vec_id"] for r in cosine_topk(df, q, k=5).collect()
+    ]
+    assert ivf_index_probe(spark, path, q, k=5, nprobe=1).collect() == []
+
+
+def test_index_without_pinned_schema_must_be_rebuilt(spark, emb, tmp_path):
+    """An index whose manifest predates the pinned vectors schema is
+    refused by every reader and by append, with a rebuild hint — no
+    fallback to schema inference."""
+    import json
+    import os
+
+    from bi_utils_spark.operators.vector_index import (
+        ivf_index_append,
+        ivf_index_probe,
+        ivf_index_probe_many,
+        ivf_index_stats,
+        write_ivf_index,
+    )
+
+    path = str(tmp_path / "ivf")
+    write_ivf_index(emb, path, num_cells=4, iters=1)
+    mpath = os.path.join(path, "_MANIFEST.json")
+    with open(mpath) as fh:
+        man = json.load(fh)
+    del man["vectors_schema"]
+    with open(mpath, "w") as fh:
+        json.dump(man, fh)
+    target = [float(x) for x in emb.first()["embedding"]]
+    queries = emb.select(F.col("vec_id").alias("qid"), "embedding")
+    calls = [
+        lambda: ivf_index_probe(spark, path, target),
+        lambda: ivf_index_probe_many(spark, path, queries),
+        lambda: ivf_index_stats(spark, path),
+        lambda: ivf_index_append(spark, path, emb),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="rebuild it with write_ivf_index"):
+            call()
+
+
+def test_index_appends_full_probe_equals_exact_union(spark, emb, tmp_path):
+    """Two appends into a multi-assigned index: a full probe equals
+    the exact cosine top-k over the union — ids and scores."""
+    from bi_utils_spark.operators.vector_index import (
+        ivf_index_append,
+        ivf_index_probe,
+        write_ivf_index,
+    )
+
+    path = str(tmp_path / "ivf")
+    write_ivf_index(
+        emb.filter(F.col("vec_id") % 3 == 0), path, num_cells=8, iters=1,
+        num_assign=2,
+    )
+    ivf_index_append(spark, path, emb.filter(F.col("vec_id") % 3 == 1))
+    ivf_index_append(spark, path, emb.filter(F.col("vec_id") % 3 == 2))
+    target = [float(x) for x in emb.first()["embedding"]]
+    got = ivf_index_probe(spark, path, target, k=10, nprobe=8).collect()
+    want = cosine_topk(emb, target, k=10).collect()
+    assert [r["vec_id"] for r in got] == [r["vec_id"] for r in want]
+    for g, w in zip(got, want):
+        assert abs(g["score"] - w["score"]) < 1e-9
